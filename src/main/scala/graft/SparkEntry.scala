@@ -222,117 +222,84 @@ object SparkEntry {
   private lazy val onlineAhpW: Array[Double] = AHP.weightVector(onlineJudgment)
   private val onlineWindowMs = 3L * 86400000L
 
-  /** Streaming-parity harness: replays the events table through a REAL
-    * file-source stream (no driver-side data beyond ONE sentinel row),
-    * runs `build` on it, and drains to a memory sink. The far-future
-    * sentinel (user_id = -1) advances the event-time watermark past every
-    * window/left so append-mode state flushes completely — end-of-stream
-    * batch parity, which is what the DuckDB oracle checks. Spark's
-    * no-data micro-batches then emit the final results before stop().
-    * At scale the same `build` pipeline runs unmodified on a live
-    * readStream; only this drain harness is test-shaped. */
   private val streamRun = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Every drain's temp dir (parquet results + checkpoint + RocksDB state)
-    * is registered here and deleted on JVM exit — repeated Bench/Verify/
-    * test runs otherwise accumulate sizeable state under /tmp (the RocksDB
-    * checkpoints at the 100x point run to GBs). Deletion is deferred to
-    * shutdown, not done eagerly, because the returned DataFrame reads
-    * `$out/data` lazily — callers may collect it long after this returns. */
-  private val streamTmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val streamTmpHookInstalled: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      streamTmpDirs.forEach { root =>
-        try {
-          java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        } catch { case _: Exception => } // best-effort: shutdown must not fail
-      }
-    }))
+  /** The entries of `dir`, failing with a message that names it when it
+    * does not exist (`File.listFiles` returns null then). */
+  private def listDir(dir: String): Array[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).getOrElse(
+      throw new IllegalStateException(s"expected directory $dir does not exist"))
+
+  /** `table` replayed as a file stream. The file source wants a
+    * DIRECTORY: point it at `$table.parquet` when that is itself a
+    * directory of part files (Spark-written layout, as ScaleData
+    * produces), else glob-filter the parent to the one file (the
+    * driver's single-file testdata layout). */
+  private def replaySource(s: SparkSession, dir: String, table: String): DataFrame = {
+    val path = s"$dir/$table.parquet"
+    val schema = s.read.parquet(path).schema
+    if (new java.io.File(path).isDirectory) s.readStream.schema(schema).parquet(path)
+    else s.readStream.schema(schema).option("pathGlobFilter", s"$table.parquet").parquet(dir)
+  }
+
+  /** Runs `body` with `confs` set on the session and restores each key's
+    * previous value (or unsets it) after. Streaming reads the state
+    * store provider and shuffle-partition count at query START, so
+    * scoping the start is enough. NOT thread-safe: the session conf is
+    * shared, so two streams starting concurrently could capture each
+    * other's values — every caller here starts streams from the single
+    * driver thread (the Bench/Verify mains are sequential). */
+  private def withConfs[A](s: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** The spark.sql.shuffle.partitions setting for a streaming drain's
+    * STATEFUL exchange, derived from the replay input's size (round 12).
+    * Streaming disables AQE, so the post-shuffle coalescing that
+    * right-sizes every batch exchange never runs — a stateful query
+    * commits one state store per shuffle partition per microbatch
+    * instead, a pure fixed cost (~40–60 ms/store/batch measured for the
+    * RocksDB drains: the q_hll_window+q_sessionize_stream pair reads
+    * 9.8 s at 32 partitions, 6.3 s at 8, 6.5 s at 4 — linear in
+    * partitions past the knee). Derivation, not a local constant: one
+    * partition per `perPartBytes` of replay input, floored at 4 (keep
+    * the post-exchange compute parallel), CAPPED at the session's
+    * configured spark.sql.shuffle.partitions — the cluster-tuned value —
+    * so a corpus-sized replay keeps full parallelism and only provably
+    * tiny inputs shed the commit overhead. */
+  private def streamShuffleConf(s: SparkSession, inputPath: String,
+      perPartBytes: Long = 4L << 20): (String, String) = {
+    val key = "spark.sql.shuffle.partitions"
+    val p = new org.apache.hadoop.fs.Path(inputPath)
+    val bytes =
+      try p.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .getContentSummary(p).getLength
+      catch { case _: Exception => Long.MaxValue } // unknown => keep session value
+    key -> math.min(s.conf.get(key).toLong,
+      math.max(4L, (bytes + perPartBytes - 1) / perPartBytes)).toString
+  }
 
   /** Complete-mode drain for BOUNDED streaming aggregations (sketch
-    * grids, O(cells) rollups): replays the documents table as a file
-    * stream, runs `build` (which must end in a streaming agg whose group
-    * count is bounded by construction, NOT by the data), drains to a
+    * grids, O(cells) rollups): replays `table` as a file stream, runs
+    * `build` (which must end in a streaming agg whose group count is
+    * bounded by construction, NOT by the data), drains to a
     * complete-mode memory sink, and returns the final table localized.
     * No watermark/sentinel machinery — complete mode re-emits the whole
     * bounded result each batch, so end-of-stream state IS batch parity.
     * The memory sink holds exactly the agg's group count (4096 rows for
     * the 4x1024 sketch) — driver-bounded by the operator's shape. */
-  /** Shuffle-partition count for a streaming drain's STATEFUL exchange,
-    * derived from the replay input's size (round 12). Streaming disables
-    * AQE, so the post-shuffle coalescing that right-sizes every batch
-    * exchange never runs — a stateful query commits one state store per
-    * shuffle partition per microbatch instead, a pure fixed cost
-    * (~40–60 ms/store/batch measured for the RocksDB drains: the
-    * q_hll_window+q_sessionize_stream pair reads 9.8 s at 32 partitions,
-    * 6.3 s at 8, 6.5 s at 4 — linear in partitions past the knee).
-    * Derivation, not a local constant: one partition per `perPartBytes`
-    * of replay input, floored at 4 (keep the post-exchange compute
-    * parallel), CAPPED at the session's configured
-    * spark.sql.shuffle.partitions — the cluster-tuned value — so a
-    * corpus-sized replay keeps full parallelism and only provably tiny
-    * inputs shed the commit overhead. `SPARK_GRAFT_STREAM_SHUFFLE`
-    * overrides the derivation outright. */
-  private def streamShufflePartitions(s: SparkSession, inputPath: String,
-      perPartBytes: Long = 4L << 20): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").map { v =>
-      // validated here (round 13): a bare toInt threw an opaque
-      // NumberFormatException, and 0/negative would fail query start
-      // far downstream with no mention of the env var
-      val n = try v.toInt catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STREAM_SHUFFLE must be a positive int, got '$v'")
-      }
-      require(n > 0,
-        s"SPARK_GRAFT_STREAM_SHUFFLE must be a positive int, got '$v'")
-      n
-    }.getOrElse {
-      val p = new org.apache.hadoop.fs.Path(inputPath)
-      val bytes =
-        try p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .getContentSummary(p).getLength
-        catch { case _: Exception => Long.MaxValue } // unknown => keep session value
-      val sessionParts = s.conf.get("spark.sql.shuffle.partitions").toInt
-      math.min(sessionParts,
-        math.max(4L, (bytes + perPartBytes - 1) / perPartBytes)).toInt
-    }
-
-  /** Runs `body` with spark.sql.shuffle.partitions scoped to `n` (the
-    * stateful-stream sizing above) and restores the session value after —
-    * the same scoped-conf pattern as the RocksDB provider swap. The
-    * partition count is baked into the stream's state layout at START,
-    * so only query start needs the scope. NOT thread-safe: the session
-    * conf is shared, so two streams starting concurrently could capture
-    * each other's count — every caller here starts streams from the
-    * single driver thread (the Bench/Verify mains are sequential). */
-  private def withShufflePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
-  private def runDocStreamComplete(s: SparkSession, dir: String, name: String)(
-      build: DataFrame => DataFrame): DataFrame =
-    runTableStreamComplete(s, dir, "documents", name)(build)
-
-  /** [[runDocStreamComplete]] over any testdata table — same bounded-
-    * group contract, same complete-mode memory-sink drain. */
   private def runTableStreamComplete(s: SparkSession, dir: String,
       table: String, name: String)(
       build: DataFrame => DataFrame): DataFrame = {
-    val docPath = s"$dir/$table.parquet"
-    val schema = s.read.parquet(docPath).schema
-    val raw =
-      if (new java.io.File(docPath).isDirectory)
-        s.readStream.schema(schema).parquet(docPath)
-      else
-        s.readStream.schema(schema)
-          .option("pathGlobFilter", s"$table.parquet").parquet(dir)
+    val raw = replaySource(s, dir, table)
     val qn = s"graft_docstream_${name}_${streamRun.incrementAndGet()}"
-    val query = withShufflePartitions(s,
-        streamShufflePartitions(s, docPath)) {
+    val query = withConfs(s, streamShuffleConf(s, s"$dir/$table.parquet")) {
       build(raw).writeStream
         .format("memory").queryName(qn)
         .outputMode("complete").start()
@@ -345,23 +312,78 @@ object SparkEntry {
     } finally query.stop()
   }
 
+  /** Run totals of one event drain: every microbatch's progress, folded
+    * in as it arrives — not read back from query.recentProgress, which
+    * keeps only the last spark.sql.streaming.numRecentProgressUpdates
+    * (default 100) and would silently understate longer drains. */
+  private final class DrainTotals {
+    var batches = 0L
+    var peakStateRows = 0L
+    var lastStateRows = 0L
+    var stateShufflePartitions = 0L
+    val phaseMs = scala.collection.mutable.Map.empty[String, Long]
+    val terminated = new java.util.concurrent.CountDownLatch(1)
+  }
+
+  /** Accumulates [[DrainTotals]] per run id. The listener bus delivers one
+    * listener's events in order on one thread, so a run's termination
+    * event arrives after all of its progress events. */
+  private final class DrainForensics
+      extends org.apache.spark.sql.streaming.StreamingQueryListener {
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    private val runs = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, DrainTotals]()
+    private def totals(id: java.util.UUID) = runs.computeIfAbsent(id, _ => new DrainTotals)
+    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: QueryProgressEvent): Unit = {
+      val p = e.progress
+      val t = totals(p.runId)
+      t.batches += 1
+      p.durationMs.forEach((k, v) => t.phaseMs(k) = t.phaseMs.getOrElse(k, 0L) + v)
+      if (p.stateOperators.nonEmpty) {
+        t.lastStateRows = p.stateOperators.map(_.numRowsTotal).sum
+        t.peakStateRows = math.max(t.peakStateRows, t.lastStateRows)
+        t.stateShufflePartitions = p.stateOperators.head.numShufflePartitions
+      }
+    }
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+      totals(e.runId).terminated.countDown()
+
+    /** Prints run `runId`'s `[stream]` line (stderr, not stdout — Bench's
+      * JSON line owns stdout) once its termination event has arrived;
+      * waits at most 30 s for it, and marks the line partial past that.
+      * Peak rows = worst microbatch's retained state over the WHOLE run,
+      * last rows = what survived the sentinel's watermark (the eviction
+      * check the 1000x stress runs record in SCALE.md); phases (round 13)
+      * = durationMs summed over every microbatch (addBatch = the batch's
+      * jobs, stateCommit etc. inside triggerExecution). */
+    def report(name: String, runId: java.util.UUID): Unit = {
+      val t = totals(runId)
+      val complete = t.terminated.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      val phases = t.phaseMs.toSeq.sortBy(-_._2)
+        .map { case (k, v) => s"$k=${v}ms" }.mkString(" ")
+      System.err.println(s"[stream] $name: peakStateRows=${t.peakStateRows}" +
+        s" lastStateRows=${t.lastStateRows}" +
+        s" stateShufflePartitions=${t.stateShufflePartitions}" +
+        s" batches=${t.batches} $phases" +
+        (if (complete) "" else " (partial: no termination event within 30 s)"))
+    }
+  }
+
+  /** Streaming-parity harness: replays the events table through a REAL
+    * file-source stream (no driver-side data beyond ONE sentinel row),
+    * runs `build` on it, and drains to a parquet sink. The far-future
+    * sentinel (user_id = -1) advances the event-time watermark past every
+    * window/left so append-mode state flushes completely — end-of-stream
+    * batch parity, which is what the DuckDB oracle checks. Spark's
+    * no-data micro-batches then emit the final results before stop().
+    * At scale the same `build` pipeline runs unmodified on a live
+    * readStream; only this drain harness is test-shaped. */
   private def runEventStream(s: SparkSession, dir: String, name: String)(
       build: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     import s.implicits._
-    // the file source wants a DIRECTORY: point it at events.parquet when
-    // that is itself a directory of part files (Spark-written layout, as
-    // ScaleData produces), else glob-filter the parent to the one file
-    // (the driver's single-file testdata layout)
-    val evPath = s"$dir/events.parquet"
-    val schema = s.read.parquet(evPath).schema
-    val raw =
-      if (new java.io.File(evPath).isDirectory)
-        s.readStream.schema(schema).parquet(evPath)
-      else
-        s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val raw = replaySource(s, dir, "events")
     val ev = raw.withColumn("ts", epochMillis(raw, "ts")).selectExpr(
       "event_id", "ts AS tms", "user_id", "event_type",
       "CAST(value AS DOUBLE) AS v")
@@ -372,105 +394,44 @@ object SparkEntry {
     // every result row into the driver (measured 54s vs 1.3s batch at the
     // 100x point — 9M closed sessions on one JVM heap); the parquet sink
     // is the production shape, distributed end to end, and the batch
-    // read-back underneath the same checker
-    streamTmpHookInstalled
-    val outPath = java.nio.file.Files
-      .createTempDirectory(s"graft_stream_${name}_${streamRun.incrementAndGet()}_")
-    streamTmpDirs.add(outPath)
-    val out = outPath.toString
-    // RocksDB state store: the replay-everything drain holds EVERY
-    // session/left of the corpus in state at once — the default
-    // HDFS-backed provider keeps that on the JVM heap (9.1M entries at
-    // the 100x point; an OOM at 1000x), RocksDB spills it off-heap/disk.
-    // Scoped to this query and restored after: the provider is read at
-    // query START from the session conf.
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // changelog checkpointing: each commit uploads the batch's DELTA
-    // instead of a full RocksDB snapshot (snapshots move to the
-    // background maintenance thread). The drain runs 4 microbatches x
-    // #shuffle-partitions store commits against the virtio disk; full
-    // snapshots made every commit an fsync-bound copy, and episodic
-    // host-side disk stalls multiplied exactly that fixed cost (the
-    // q_asof_stream 6.4s<->29.8s swing in BASELINE.md — root cause
-    // written down in SCALE.md round 11)
-    val changelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevChangelog = s.conf.getOption(changelogKey)
-    s.conf.set(changelogKey, sys.env.getOrElse("SPARK_GRAFT_CHANGELOG", "true"))
-    // peak state is tracked by a LISTENER over every progress event, not by
-    // maxing query.recentProgress afterwards: recentProgress retains only
-    // spark.sql.streaming.numRecentProgressUpdates (default 100) entries, so
-    // a drain with >100 microbatches would silently understate the peak the
-    // 1000x stress evidence in SCALE.md relies on
-    val peaks = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, java.lang.Long]()
-    val peakListener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.stateOperators.nonEmpty) {
-          val rows = e.progress.stateOperators.map(_.numRowsTotal).sum
-          peaks.merge(e.progress.runId, rows,
-            (a, b) => if (a >= b) a else b)
-        }
-      override def onQueryTerminated(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    s.streams.addListener(peakListener)
-    val query =
-      try withShufflePartitions(s, streamShufflePartitions(s, evPath)) {
+    // read-back underneath the same checker. Results, checkpoint and
+    // RocksDB state (GBs at the 100x point) share one temp dir, deleted at
+    // JVM exit rather than eagerly: the returned DataFrame reads
+    // `$out/data` lazily, possibly long after this returns.
+    val out = graft.core.Stage.tempDir(s"graft_stream_$name").toString
+    val forensics = new DrainForensics
+    s.streams.addListener(forensics)
+    try {
+      // RocksDB state store: the replay-everything drain holds EVERY
+      // session/left of the corpus in state at once — the default
+      // HDFS-backed provider keeps that on the JVM heap (9.1M entries at
+      // the 100x point; an OOM at 1000x), RocksDB spills it off-heap/disk.
+      // Changelog checkpointing: each commit uploads the batch's DELTA
+      // instead of a full RocksDB snapshot (snapshots move to the
+      // background maintenance thread). The drain runs 4 microbatches x
+      // #shuffle-partitions store commits against the virtio disk; full
+      // snapshots made every commit an fsync-bound copy, and episodic
+      // host-side disk stalls multiplied exactly that fixed cost (the
+      // q_asof_stream 6.4s<->29.8s swing in BASELINE.md — root cause
+      // written down in SCALE.md round 11)
+      val query = withConfs(s,
+          "spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+          streamShuffleConf(s, s"$dir/events.parquet")) {
         build(union).writeStream
           .format("parquet").option("path", s"$out/data")
           .option("checkpointLocation", s"$out/ckpt")
           .outputMode("append").start()
       }
-      finally {
-        prevProvider match {
-          case Some(v) => s.conf.set(providerKey, v)
-          case None => s.conf.unset(providerKey)
-        }
-        prevChangelog match {
-          case Some(v) => s.conf.set(changelogKey, v)
-          case None => s.conf.unset(changelogKey)
-        }
-      }
-    try {
-      query.processAllAvailable()
-      // 2100-01-01: past every real event, inside the timestamp range
-      mem.addData((-1L, 4102444800000L, -1L, "sentinel", 0.0))
-      query.processAllAvailable()
-    } finally {
-      query.stop()
-      s.streams.removeListener(peakListener)
-    }
-    // state-store forensics (stderr, not stdout — Bench's JSON line owns
-    // stdout): peak rows = worst microbatch's retained state over the WHOLE
-    // run, last rows = what survived the sentinel's watermark (the eviction
-    // check the 1000x stress runs record in SCALE.md). recentProgress is
-    // kept as a max-merge fallback against listener-bus delivery lag.
-    val withState = query.recentProgress.filter(_.stateOperators.nonEmpty)
-    if (withState.nonEmpty) {
-      def rows(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Long =
-        p.stateOperators.map(_.numRowsTotal).sum
-      val peak = math.max(withState.map(rows).max,
-        Option(peaks.get(query.runId)).map(_.longValue).getOrElse(0L))
-      val stateParts = withState.last.stateOperators.head.numShufflePartitions
-      // phase forensics (round 13): where a drain's wall-clock goes —
-      // durationMs summed over every microbatch (addBatch = the batch's
-      // jobs, stateCommit etc. inside triggerExecution)
-      import scala.jdk.CollectionConverters._
-      val phases = query.recentProgress.flatMap(_.durationMs.asScala)
-        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2.longValue).sum }
-        .toSeq.sortBy(-_._2)
-        .map { case (k, v) => s"$k=${v}ms" }.mkString(" ")
-      System.err.println(s"[stream] $name: peakStateRows=$peak" +
-        s" lastStateRows=${rows(withState.last)}" +
-        s" stateShufflePartitions=$stateParts" +
-        s" batches=${query.recentProgress.length} $phases")
-    }
+      try {
+        query.processAllAvailable()
+        // 2100-01-01: past every real event, inside the timestamp range
+        mem.addData((-1L, 4102444800000L, -1L, "sentinel", 0.0))
+        query.processAllAvailable()
+      } finally query.stop()
+      forensics.report(name, query.runId)
+    } finally s.streams.removeListener(forensics)
     s.read.parquet(s"$out/data")
   }
 
@@ -2306,10 +2267,7 @@ object SparkEntry {
     // Jaccard edge relation as q_dedup_minhash.
     "q_index_stream" -> ((s, dir) => {
       import graft.operators.Dedup
-      streamTmpHookInstalled
-      val base = java.nio.file.Files.createTempDirectory(
-        s"graft_idxstream_${streamRun.incrementAndGet()}_")
-      streamTmpDirs.add(base)
+      val base = graft.core.Stage.tempDir("graft_idxstream")
       val docs = tbl(s, dir, "documents").filter(col("text").isNotNull)
         .select(col("doc_id"), col("text"),
           pmod(col("doc_id"), lit(3L)).as("batch"))
@@ -2326,7 +2284,7 @@ object SparkEntry {
         .repartition(col("__part"))
         .write.partitionBy("__part").mode("overwrite").parquet(tmp)
       (0 until 3).foreach { b =>
-        val part = new java.io.File(s"$tmp/__part=$b").listFiles()
+        val part = listDir(s"$tmp/__part=$b")
           .find(_.getName.endsWith(".parquet")).get
         val dest = inDir.resolve(s"b$b.parquet").toFile
         require(part.renameTo(dest), s"stage move failed: $dest")
@@ -2342,7 +2300,7 @@ object SparkEntry {
       // stateful drains: a ~1.7k-doc microbatch over 32-partition
       // exchanges is pure task-scheduling overhead; results are
       // partitioning-independent)
-      withShufflePartitions(s, streamShufflePartitions(s, inDir.toString)) {
+      withConfs(s, streamShuffleConf(s, inDir.toString)) {
         val q = Dedup.incrementalNearDupSink(
           s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
             .parquet(inDir.toString),
@@ -2356,7 +2314,7 @@ object SparkEntry {
       // sink-detection probe logs a scary FileNotFoundException stack
       // (benign, but it was the first thing in every round's
       // entry_tail); multiple resolved paths skip the probe entirely.
-      val batchDirs = new java.io.File(surv).listFiles()
+      val batchDirs = listDir(surv)
         .filter(f => f.isDirectory && f.getName.startsWith("batch-"))
         .map(_.toString).sorted
       s.read.parquet(batchDirs.toIndexedSeq: _*)
@@ -2368,7 +2326,7 @@ object SparkEntry {
     // q_dedup_minhash oracle covers the driver union-find that small
     // edge lists take; this one pins the 100 TB path — O(log diameter)
     // join+min rounds, per-generation cache discipline — under the same
-    // recursive-closure oracle. ClusterProbe showed the two paths agree
+    // recursive-closure oracle. SCALE.md records the two paths agreeing
     // on 1000x edges; this makes the distributed path's exactness a
     // per-round gate instead of a one-off experiment.
     "q_cc" -> ((s, dir) => {
@@ -3641,7 +3599,7 @@ object SparkEntry {
     // state == #sources * m registers at any corpus size, and the
     // drained registers equal the batch table (max is the merge)
     "q_hll_stream" -> ((s, dir) =>
-      runDocStreamComplete(s, dir, "hll") { docs =>
+      runTableStreamComplete(s, dir, "documents", "hll") { docs =>
         graft.operators.TextAnalysis.hllRegisters(
           docs.filter(col("text").isNotNull)
             .select(col("source"),
@@ -3655,7 +3613,7 @@ object SparkEntry {
     // bounded by the sketch shape, not the data), drain, and match the
     // batch grid bit-for-bit under the same oracle arithmetic
     "q_count_min_stream" -> ((s, dir) =>
-      runDocStreamComplete(s, dir, "count_min") { docs =>
+      runTableStreamComplete(s, dir, "documents", "count_min") { docs =>
         graft.operators.TextAnalysis.countMinCells(docs, "text",
           depth = 4, width = 1024)
       }),
@@ -3682,7 +3640,7 @@ object SparkEntry {
     // ranks) so the replay is exact on any engine; the length monitor
     // a live ingest runs where exactQuantiles would need the corpus.
     "q_quantile_stream" -> ((s, dir) => {
-      val cells = runDocStreamComplete(s, dir, "qtile") { docs =>
+      val cells = runTableStreamComplete(s, dir, "documents", "qtile") { docs =>
         Quantiles.boundedHistCells(
           docs.filter(col("text").isNotNull),
           size(split(lower(col("text")), "\\s+")).cast("long"),

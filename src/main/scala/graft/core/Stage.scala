@@ -57,21 +57,28 @@ object Stage {
     }))
   private val runId = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** A fresh driver-local temp dir, deleted with its contents at JVM
+    * exit — the one scratch-dir mechanism behind stage tables, stream
+    * drains and fixture writers. */
+  private[graft] def tempDir(prefix: String): java.nio.file.Path = {
+    hookInstalled
+    val dir = java.nio.file.Files.createTempDirectory(
+      s"${prefix}_${runId.incrementAndGet()}_")
+    localDirs.add(dir)
+    dir
+  }
+
   /** Write `df` to a fresh stage table and return a lazy reader over it. */
   def materialize(df: DataFrame, tag: String): DataFrame = {
-    hookInstalled
     val spark = df.sparkSession
-    val unique = s"graft_stage_${tag}_${runId.incrementAndGet()}_" +
-      java.util.UUID.randomUUID().toString.take(8)
     val path = spark.conf.getOption(StageDirConf) match {
       case Some(base) =>
-        val dir = s"${base.stripSuffix("/")}/$unique"
+        hookInstalled
+        val dir = s"${base.stripSuffix("/")}/graft_stage_${tag}_" +
+          s"${runId.incrementAndGet()}_" + java.util.UUID.randomUUID().toString.take(8)
         remoteDirs.add((spark.sparkContext.hadoopConfiguration, dir))
         s"$dir/data"
-      case None =>
-        val dir = java.nio.file.Files.createTempDirectory(unique)
-        localDirs.add(dir)
-        dir.resolve("data").toString
+      case None => tempDir(s"graft_stage_$tag").resolve("data").toString
     }
     df.write.parquet(path)
     spark.read.parquet(path)

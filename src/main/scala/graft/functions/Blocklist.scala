@@ -75,7 +75,7 @@ object Blocklist {
  * the automaton walks the text once at any pattern count. The MEASURED
  * crossover is higher than the asymptotics suggest — HotSpot's SIMD
  * `String.indexOf` intrinsic holds the brute walk at par to ~4k
- * patterns on KB documents (BlocklistProbe over 500k docs: 500 pats
+ * patterns on KB documents (SCALE.md "blocklist tiers", 500k docs: 500 pats
  * 0.9 vs 1.0s, 4k pats 7.4 vs 13.3s for indexOf vs AC, 16k pats 33.4
  * vs 13.4s — AC flat, indexOf linear in patterns). So: the indexOf
  * kernel is the right default through UT1-size lists; this tier is the
@@ -134,7 +134,7 @@ final class AhoCorasick(val patterns: Array[String]) {
     * states×128 DFA table (fail links resolved at build) was measured
     * SLOWER at 4k patterns (15.7s vs 8.2s over 500k docs) — the ~20 MB
     * table thrashes cache, while the sparse walk's hot shallow states
-    * stay resident. See the Probe notes on when this tier wins at all. */
+    * stay resident. SCALE.md records when this tier wins at all. */
   private def step(state: Int, c: Char): Int = {
     var s = state
     while (true) {

@@ -240,18 +240,6 @@ object Dedup {
     * shared candidate-generation shape behind the fused batch verify and
     * the incremental index (`incrementalNearDup`). One signature UDF call
     * per doc; the explode is bands× rows, never pairs. */
-  /** Probe/forensics entry to the banded signature rows (IndexProbe). */
-  def bandedShingleRowsPublic(df: DataFrame, textCol: String, idCol: String,
-                              numHashes: Int, bands: Int, seed: Long,
-                              shingleN: Int): DataFrame =
-    bandedShingleRows(df, textCol, idCol, numHashes, bands, seed, shingleN)
-
-  /** Probe/forensics entry to the round-13 fused verify pass (plan
-    * evidence + IndexProbe). */
-  def fusedBucketVerifyPublic(banded: DataFrame, idxRows: Option[DataFrame],
-                              threshold: Double, maxBucketSize: Int): DataFrame =
-    fusedBucketVerify(banded, idxRows, threshold, maxBucketSize)
-
   private[operators] def bandedShingleRows(df: DataFrame, textCol: String,
                                            idCol: String, numHashes: Int,
                                            bands: Int, seed: Long,
@@ -623,7 +611,7 @@ object Dedup {
       val idxRows: Option[DataFrame] =
         graft.sources.GraftTable.snapshotMeta(spark, indexDir)
           .filter(_.refs.nonEmpty).map { meta =>
-          // Round 13: below a metadata-derived size floor the bucket
+          // Round 13: below a 32 MB index-size floor the bucket
           // prune cannot pay — collecting the batch's key set is a
           // Spark job (~0.3 s fixed) that saves at most `totalBytes` of
           // extra scan, so a provably tiny index reads whole. Pure
@@ -631,10 +619,8 @@ object Dedup {
           // the floor — i.e. everywhere at scale — the pruned path runs
           // unchanged.
           val idxBytes = meta.refs.map(_.bytes).sum
-          val pruneFloor = sys.env.get("SPARK_GRAFT_IDX_PRUNE_FLOOR")
-            .map(_.toLong).getOrElse(32L << 20)
           val idx =
-            if (idxBytes <= pruneFloor)
+            if (idxBytes <= (32L << 20))
               graft.sources.GraftTable.read(spark, indexDir)
             else {
               val maxPruneKeys = 1 << 20
@@ -1598,12 +1584,12 @@ object Dedup {
    * pair materialization.
    */
   /** The exploded (doc, shingle-hash) relation noveltyScores aggregates —
-    * exposed package-wide for scale forensics (NoveltyProbe). Fused JVM
+    * shared by the containment, novelty and prefix-filter joins. Fused JVM
     * kernel, not the Column-form hashedTokens: no lambda-CSE re-hashing
     * (measured 46s -> 0.3s for the explode at 5k docs). Null text carries
     * no shingles -> no row (the LM-score convention). */
-  private[graft] def docShingles(df: DataFrame, textCol: String, idCol: String,
-                                 shingleN: Int = 3): DataFrame = {
+  private def docShingles(df: DataFrame, textCol: String, idCol: String,
+                          shingleN: Int): DataFrame = {
     val shUdf = udf { (text: String) => shingleHashes(text, shingleN) }
     df.filter(col(textCol).isNotNull)
       .select(col(idCol).as("__doc"),

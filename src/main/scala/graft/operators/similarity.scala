@@ -486,15 +486,15 @@ object Similarity {
    * the ≤(d(d+1)/2 + d) partial cells per task enter the streaming
    * aggregation as exact scale-12 decimals. The previous shape (explode
    * every cell of every row into the decimal agg) paid a measured
-   * ~3.7 ms/row — 70× the batch kernel (CovStreamProbe, SCALE.md): a
+   * ~3.7 ms/row — 70× the batch kernel (SCALE.md, round 12): a
    * Decimal cast + non-vectorized Decimal add per CELL, n·(d²/2+d)
    * rows through the exchange per microbatch. The kernel pays primitive
    * long adds per cell and ships O(tasks · d²) cells, never O(rows · d²)
    * — the same exchange-carries-cells scale shape as the batch kernel,
    * now per delta. Drained grid bit-identical by construction (decimal
    * addition is exact, so any grouping/order of the same quantized
-   * multiset sums identically); CovStreamProbe re-checks grid equality
-   * against the batch path on every run.
+   * multiset sums identically); StreamingSpec's covariance case pins
+   * grid equality against the batch path.
    *
    * Cells are tracked in a LongMap keyed by (i, j), so ragged vectors
    * contribute to exactly the cells their length reaches — per-cell

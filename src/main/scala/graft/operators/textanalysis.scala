@@ -21,6 +21,26 @@ object TextAnalysis {
 
   private def words(text: Column): Column = split(lower(text), "\\s+")
 
+  /** JVM twin of Spark's `lower()`: all-ASCII text lowercases A-Z only,
+    * whatever the default locale (UTF8String.toLowerCase's fast path);
+    * anything else falls back to String.toLowerCase, as Spark's slow path
+    * does. A bare toLowerCase maps 'I' to dotless 'ı' on a Turkish- or
+    * Azeri-locale JVM, where lower() keeps 'i'. */
+  private def lowerLikeSpark(t: String): String = {
+    var i = 0
+    while (i < t.length && t.charAt(i) < 0x80) i += 1
+    if (i < t.length) t.toLowerCase
+    else {
+      val cs = t.toCharArray
+      var j = 0
+      while (j < cs.length) {
+        if (cs(j) >= 'A' && cs(j) <= 'Z') cs(j) = (cs(j) + 32).toChar
+        j += 1
+      }
+      new String(cs)
+    }
+  }
+
   /**
    * HTML → plain text extraction — the front-door operator of a web
    * corpus ingest, as a pure `Column` regex chain (codegen'd, scan-
@@ -1071,7 +1091,7 @@ object TextAnalysis {
     * cost profiles at 2x the md5 itself (2.4s -> 0.6s at sf0.1).
     * Shared by the batch and streaming sketch paths so both fill
     * IDENTICAL cells. */
-  private def cmBucket(width: Int) = udf { (term: String, r: Int) =>
+  private[graft] def cmBucket(width: Int) = udf { (term: String, r: Int) =>
     (Dedup.md5LongJvm("cm" + r + "_" + term) % width).toInt
   }
 
@@ -1127,7 +1147,7 @@ object TextAnalysis {
           if (t != null) {
             // JVM twin of words(): split(lower(text), "\\s+") with
             // Spark's limit = -1 (leading/trailing empties kept)
-            val ws = t.toLowerCase.split("\\s+", -1)
+            val ws = Dedup.wsPattern.split(lowerLikeSpark(t), -1)
             var i = 0
             while (i < ws.length) {
               counts.getOrElseUpdate(ws(i), new Array[Long](1))(0) += 1

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
  * Why two levels: a single manifest listing the complete file set is
  * comfortable to ~10^5 entries but (a) re-writes O(total files) bytes
  * on EVERY commit and (b) costs ~10 s to parse at 10^6 entries
- * (measured, ManifestProbe) — both divergent at 100 TB. With the list
+ * (measured, SCALE.md) — both divergent at 100 TB. With the list
  * layout a commit writes only its OWN shard(s) plus a list whose size
  * is O(#shards), and a pruned read applies the [minBucket, maxBucket]
  * rule TWICE: shard refs are pruned before any shard is even read,

@@ -33,29 +33,10 @@ import org.apache.spark.sql.DataFrame
  * and drops multiLine.
  */
 object TextFormats {
-  private val dirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val hookInstalled: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      dirs.forEach { root =>
-        try java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        catch { case _: Exception => } // best-effort: shutdown must not fail
-      }
-    }))
-  private val runId = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Shutdown-cleaned scratch path for sibling fixture writers (Warc). */
-  private[sources] def scratchDir(tag: String): String = tempDir(tag)
-
-  private def tempDir(tag: String): String = {
-    hookInstalled
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft_fmt_${tag}_${runId.incrementAndGet()}_")
-    dirs.add(dir)
-    dir.resolve("data").toString
-  }
+  /** Shutdown-cleaned scratch path for the writers here and their
+    * siblings (Warc, GraftTable). */
+  private[sources] def scratchDir(tag: String): String =
+    graft.core.Stage.tempDir(s"graft_fmt_$tag").resolve("data").toString
 
   /** Write `df` as headered, `\N`-null, quote-escaped CSV and read it
     * back under the same schema.
@@ -70,7 +51,7 @@ object TextFormats {
     * in both directions. Applied per string column as a codegen'd
     * regexp — scan-local, no shuffle. */
   def csvRoundTrip(df: DataFrame, tag: String): DataFrame = {
-    val path = tempDir(tag)
+    val path = scratchDir(tag)
     escapeNullToken(df).write
       .option("header", "true").option("nullValue", "\\N")
       .option("escape", "\"")
@@ -109,7 +90,7 @@ object TextFormats {
 
   /** Write `df` as JSON Lines and read it back under the same schema. */
   def jsonlRoundTrip(df: DataFrame, tag: String): DataFrame = {
-    val path = tempDir(tag)
+    val path = scratchDir(tag)
     df.write.json(path)
     df.sparkSession.read.schema(df.schema).json(path)
   }
@@ -122,7 +103,7 @@ object TextFormats {
     * record ownership is quote-aware (see SplittableCsv). */
   def csvSplittableRoundTrip(df: DataFrame, tag: String,
                              blockBytes: Long): DataFrame = {
-    val path = tempDir(tag)
+    val path = scratchDir(tag)
     escapeNullToken(df).coalesce(1).write
       .option("header", "true").option("nullValue", "\\N")
       .option("escape", "\"")

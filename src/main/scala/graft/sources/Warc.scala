@@ -95,7 +95,7 @@ object Warc {
     * output (same header constants and compression level as Java's
     * GZIPOutputStream), but the native zlib context is REUSED across
     * members: a per-record `new Deflater` is ~half the cost of archiving
-    * a small record (measured at 5M members, WarcProbe). */
+    * a small record (measured at 5M members, SCALE.md). */
   def memberBytesReusing(targetUri: String, date: String, recordId: String,
                          payload: Array[Byte], deflater: Deflater,
                          crc: CRC32): Array[Byte] = {
@@ -371,7 +371,7 @@ object Warc {
     * decompressed bytes and the offset just past the member's trailer,
     * or throws [[BadMember]] (validation failure — caller resyncs).
     * `inflater` is caller-owned and reset here — one native zlib context
-    * per range task, not per member (the 5M-member lesson, WarcProbe). */
+    * per range task, not per member (the 5M-member lesson, SCALE.md). */
   private def decodeMember(r: ByteReader, offset: Long, maxMemberBytes: Int,
                            inflater: Inflater, crcCheck: CRC32): (Array[Byte], Long) = {
     r.seek(offset)

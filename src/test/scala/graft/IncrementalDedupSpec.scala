@@ -190,4 +190,14 @@ class IncrementalDedupSpec extends GraftSpec {
     assert(s.select("doc_id").as[Long].collect().sorted.toSeq == Seq(100L))
     s.unpersist()
   }
+
+  test("q_index_stream: a replay batch with no documents fails naming its dir") {
+    // no doc_id % 3 == 2, so staging writes no __part=2 dir to move
+    val dir = Files.createTempDirectory("nd_missing").toString
+    Seq((3L, doc("x")), (4L, doc("y"))).toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val e = intercept[IllegalStateException](
+      SparkEntry.queries("q_index_stream")(spark, dir))
+    assert(e.getMessage.contains("__part=2"), e.getMessage)
+  }
 }

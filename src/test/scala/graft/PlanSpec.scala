@@ -480,6 +480,56 @@ class PlanSpec extends GraftSpec {
     assert(leaked.isEmpty, s"queries left persisted RDDs behind: $leaked")
   }
 
+  test("incremental near-dup: batch 2 verifies in ONE exchange over a Union") {
+    import graft.operators.Dedup
+    import org.apache.spark.sql.execution.{MapGroupsExec, QueryExecution, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import scala.jdk.CollectionConverters._
+    // every node, looking through AQE wrappers, query stages and caches
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val docs = spark.read.parquet(s"${sf()}/documents.parquet")
+      .filter(col("text").isNotNull).select(col("doc_id"), col("text"))
+    val idxDir = java.nio.file.Files.createTempDirectory("plan_fused").toString + "/idx"
+    def ingest(b: Long) = Dedup.incrementalNearDup(
+      docs.filter(pmod(col("doc_id"), lit(3L)) === b), idxDir, "text", "doc_id",
+      numHashes = 16, bands = 4, seed = 42L, shingleN = 1, threshold = 0.8)
+    ingest(0L).unpersist()
+    // batch 2 has an index to verify against: capture its executed plans
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def fusedPass = seen.asScala.flatMap(nodes).collectFirst {
+      case m: MapGroupsExec if nodes(m).exists(_.isInstanceOf[UnionExec]) => m
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ingest(1L).unpersist()
+      // listener events arrive on the bus asynchronously: bounded wait
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (fusedPass.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val fused = fusedPass.getOrElse(fail("batch 2 ran no MapGroups over a Union"))
+    val below = nodes(fused)
+    val shuffles = below.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.length == 1, s"the fused verify must shuffle exactly once:\n$fused")
+    assert(nodes(shuffles.head).exists(_.isInstanceOf[UnionExec]),
+      s"batch and index rows must share the one exchange:\n$fused")
+    assert(!below.exists(_.isInstanceOf[SortMergeJoinExec]),
+      s"no index-probe sort-merge join:\n$fused")
+    assert(below.count(_.isInstanceOf[MapGroupsExec]) == 1,
+      s"no separate groupByKey pass:\n$fused")
+  }
+
   test("FCM with cosine distance converges and predicts on direction clusters") {
     // two angular clusters: along x-axis and along y-axis (cosine distance
     // separates by direction, not magnitude)

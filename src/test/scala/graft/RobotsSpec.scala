@@ -121,4 +121,14 @@ class RobotsSpec extends GraftSpec {
     // host is the root path, which graftbot's group leaves allowed
     assert(got.toSeq == Seq((1L, false), (2L, false), (3L, true), (4L, true)))
   }
+
+  test("robotsGate: a robots table past maxDomains fails fast, naming the knob") {
+    val urls = Seq((1L, "d0.com", "http://d0.com/x")).toDF("id", "domain", "url")
+    val robotsDf = (0 until 5).map(i => (s"d$i.com", robots)).toDF("domain", "content")
+    def gate(maxDomains: Int) = Robots.robotsGate(urls, col("url"), col("domain"),
+      robotsDf, "domain", "content", "graftbot", maxDomains = maxDomains)
+    assert(gate(5).count() == 1L, "a table of exactly maxDomains rows is accepted")
+    val e = intercept[IllegalArgumentException](gate(4))
+    assert(e.getMessage.contains("maxDomains=4"), e.getMessage)
+  }
 }

@@ -134,6 +134,38 @@ class StreamingSpec extends GraftSpec {
     } finally query.stop()
   }
 
+  test("streaming count-min: grid equals the batch cmBucket path on a tr-TR JVM") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.operators.TextAnalysis
+    // Turkish casing maps 'I' to dotless 'ı' in String.toLowerCase, while
+    // Spark's lower() (the batch path) lowercases ASCII locale-free
+    val docs = Seq((1L, "IBM Istanbul INDEX"), (2L, "Idle io I"))
+    def cells(d: org.apache.spark.sql.DataFrame) = d.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val prev = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+    try {
+      val mem = MemoryStream[(Long, String)]
+      val query = TextAnalysis.countMinCells(
+          mem.toDF().toDF("doc_id", "text"), "text", depth = 4, width = 32)
+        .writeStream.format("memory").queryName("cm_tr").outputMode("complete").start()
+      val streamed =
+        try { mem.addData(docs); query.processAllAvailable(); cells(spark.table("cm_tr")) }
+        finally query.stop()
+      // countMinTopTerms' grid: exact term counts, summed per (row, cmBucket)
+      val bucket = TextAnalysis.cmBucket(32)
+      val batch = cells(docs.toDF("doc_id", "text")
+        .select(explode(split(lower(col("text")), "\\s+")).as("term"))
+        .groupBy(col("term")).agg(count(lit(1)).as("n"))
+        .select(col("term"), col("n"), explode(sequence(lit(0), lit(3))).as("r"))
+        .select(col("r").cast("long").as("r"),
+          bucket(col("term"), col("r")).cast("long").as("b"), col("n"))
+        .groupBy(col("r"), col("b")).agg(sum(col("n"))))
+      assert(streamed == batch, "stream grid != batch grid under tr-TR")
+    } finally java.util.Locale.setDefault(prev)
+  }
+
   test("windowed HLL: registers emit as the watermark closes windows; state evicts") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
